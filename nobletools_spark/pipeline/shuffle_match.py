@@ -30,6 +30,7 @@ from __future__ import annotations
 from typing import Iterator
 
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as ST
@@ -37,7 +38,7 @@ from pyspark.sql import types as ST
 from ..config import SearchConfig, for_search_method
 from ..matcher.core import process_sentence
 from ..terminology.storage import ConceptMeta, Dictionary
-from .stages import MENTIONS_SCHEMA
+from .stages import MENTIONS_SCHEMA, MentionColumns
 
 _WORDS_SCHEMA = ST.ArrayType(ST.StringType())
 
@@ -97,59 +98,40 @@ def detect_mentions_shuffle(sentences: DataFrame,
     regex_map = dict(base_dico.regex_map) if base_dico is not None else {}
     cfg_final = cfg
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out: dict[str, list] = {f.name: [] for f in MENTIONS_SCHEMA.fields}
+    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        from ..text import tools as T
+        for b in batches:
+            out = MentionColumns()
             for doc_id, sent_id, text, offset, cand in zip(
-                    pdf["doc_id"], pdf["sent_id"], pdf["text"],
-                    pdf["offset"], pdf["cand"]):
+                    *(b.column(c).to_pylist()
+                      for c in ("doc_id", "sent_id", "text", "offset",
+                                "cand"))):
                 mini = Dictionary(build_config=cfg_final)
                 mini.regex_map = regex_map
                 if cand is not None:
                     tm: dict[str, set] = {}
                     wm: dict[str, set] = {}
-                    for row in cand:
-                        r = row if isinstance(row, dict) else row.asDict()
+                    for r in cand:
                         tm.setdefault(r["term"], set()).add(r["cui"])
-                        from ..text import tools as T
                         for w in T.get_words(r["term"]):
                             wm.setdefault(w, set()).add(r["term"])
                         if r["cui"] not in mini.concepts:
-                            def arr(x):  # Arrow hands arrays as numpy
-                                return tuple(x) if x is not None else ()
                             mini.concepts[r["cui"]] = ConceptMeta(
                                 cui=r["cui"], name=r["name"],
-                                synonyms=arr(r["synonyms"]),
-                                sem_types=arr(r["sem_types"]),
-                                sources=arr(r["sources"]),
-                                terms=tuple(
-                                    (t["text"], t["form"]) if isinstance(t, dict)
-                                    else (t.text, t.form)
-                                    for t in arr(r["cterms"])))
+                                synonyms=tuple(r["synonyms"] or ()),
+                                sem_types=tuple(r["sem_types"] or ()),
+                                sources=tuple(r["sources"] or ()),
+                                terms=tuple((t["text"], t["form"])
+                                            for t in r["cterms"] or ()))
                     mini.term_map = {t: tuple(sorted(s)) for t, s in tm.items()}
                     mini.word_map = {w: tuple(sorted(s)) for w, s in wm.items()}
-                for m in process_sentence(text, mini, cfg_final):
-                    anns = [{"text": t, "offset": int(offset) + o}
-                            for t, o in m.annotations]
-                    out["doc_id"].append(doc_id)
-                    out["sent_id"].append(int(sent_id))
-                    out["cui"].append(m.cui)
-                    out["concept_name"].append(m.concept_name)
-                    out["matched_term"].append(m.matched_term)
-                    out["normalized_term"].append(m.normalized_term)
-                    out["score"].append(float(m.score))
-                    out["annotations"].append(anns)
-                    out["start"].append(anns[0]["offset"] if anns else -1)
-                    out["end"].append(max(a["offset"] + len(a["text"])
-                                          for a in anns) if anns else -1)
-                    out["sem_types"].append(list(m.sem_types))
-                    out["sources"].append(list(m.sources))
-            if out["doc_id"]:
-                yield pd.DataFrame(out)
+                out.add(doc_id, sent_id, offset,
+                        process_sentence(text, mini, cfg_final))
+            yield out.batch()
 
     return (joined
             .select("doc_id", "sent_id", "text", "offset", "cand")
-            .mapInPandas(run, schema=MENTIONS_SCHEMA))
+            .mapInArrow(run, schema=MENTIONS_SCHEMA))
 
 
 # broadcast budget above which the match flips to the shuffle-join path

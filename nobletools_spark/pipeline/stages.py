@@ -2,11 +2,26 @@
 
 Stage architecture (SURVEY.md §7): each stage is a pure DataFrame ->
 DataFrame transform; the heavy lexical work runs inside Arrow-batched
-``mapInPandas`` over a broadcast dictionary (the Spark analog of the
+Python map stages over a broadcast dictionary (the Spark analog of the
 reference's single-JVM loop over JDBM hashtables — every sentence is
 independent, so the per-sentence matcher parallelizes embarrassingly
 across executors; the only shuffles in the whole pipeline are the
 document-level context pass (groupBy doc_id) and the final triple dedupe).
+
+One Python stage per pass: ``run_pipeline`` without a modifier
+terminology splits and matches in a single ``mapInArrow`` over the
+documents (``_split_and_match``) instead of chaining ``split_sentences``
+into ``detect_mentions``. Every Python task pays a fixed worker set-up:
+the worker calls ``importlib.invalidate_caches()`` per task, so each
+cached zipimporter over ``pyspark.zip`` re-reads the zip directory —
+110-185 ms of worker CPU per task on a 4-core host, where a do-nothing
+``mapInArrow`` over 16 partitions adds 0.95 s to a pass and two chained
+ones 2.1 s, against ~0.5 s of wall for the matcher itself. Fusing halves
+the task launches and drops the sentences' JVM round trip. The public
+stages stay for checkpoints, streaming and the context pass, and share
+the fused stage's code: ``_doc_sentences`` (one document's sentences)
+and ``MentionColumns`` (the column-wise mention row build, straight into
+Arrow arrays with no per-mention dicts and no pandas).
 
 Scale posture:
 - dictionaries travel once per executor via ``SparkContext.broadcast``;
@@ -23,6 +38,7 @@ from __future__ import annotations
 from typing import Iterator
 
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as ST
@@ -82,96 +98,182 @@ def salt_documents(documents: DataFrame, salt_buckets: int = 0) -> DataFrame:
     return documents.repartition(salt_buckets)
 
 
+def _doc_sentences(doc_id: str, spans, doc_type: str = SP.TYPE_MEDICAL_REPORT,
+                   filter_headers: bool = True) -> Iterator[tuple]:
+    """Typed sentences of one document's ``kind='text'`` spans, yielded as
+    ``SENTENCES_SCHEMA`` tuples with document-absolute offsets (C1-C6)."""
+    sent_id = 0
+    para_base = 0
+    for span in spans:
+        stext = span["text"]
+        if span["kind"] != "text" or not stext:
+            continue
+        rows, secs = SP.process_document(stext, doc_type)
+        paras = SP.find_paragraphs(stext, secs)
+
+        def pid_for(off: int) -> int:
+            for j, p in enumerate(paras):
+                if p.start <= off < max(p.end, p.start + 1):
+                    return para_base + j
+            return -1
+
+        for r in rows:
+            # clip the phantom trailing pad the line-splitter appends past
+            # the end of the span (parity artifact of re-appending '\n' to
+            # the final split line)
+            over = (r.offset + len(r.text)) - len(stext)
+            if over > 0:
+                r.text = r.text[:-over]
+            if SP.filter_sentence(r.text, r.sent_type,
+                                  filter_header=filter_headers):
+                continue
+            yield (doc_id, sent_id, r.sent_type, r.text,
+                   int(span["offset"]) + r.offset, pid_for(r.offset))
+            sent_id += 1
+        para_base += len(paras)
+
+
 def split_sentences(documents: DataFrame, doc_type: str = SP.TYPE_MEDICAL_REPORT,
                     filter_headers: bool = True) -> DataFrame:
     """P1: explode ``kind='text'`` spans into typed sentences with
     document-absolute offsets (C1-C6). Narrow transform, no shuffle."""
+    columns = SENTENCES_SCHEMA.fieldNames()
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            out: dict[str, list] = {k: [] for k in
-                                    ("doc_id", "sent_id", "sent_type", "text",
-                                     "offset", "paragraph_id")}
-            for doc_id, spans in zip(pdf["doc_id"], pdf["spans"]):
-                sent_id = 0
-                para_base = 0
-                for span in spans:
-                    kind = span["kind"] if isinstance(span, dict) else span.kind
-                    if kind != "text":
-                        continue
-                    stext = span["text"] if isinstance(span, dict) else span.text
-                    soff = span["offset"] if isinstance(span, dict) else span.offset
-                    if not stext:
-                        continue
-                    rows, secs = SP.process_document(stext, doc_type)
-                    paras = SP.find_paragraphs(stext, secs)
-
-                    def pid_for(off: int) -> int:
-                        for j, p in enumerate(paras):
-                            if p.start <= off < max(p.end, p.start + 1):
-                                return para_base + j
-                        return -1
-
-                    for r in rows:
-                        # clip the phantom trailing pad the line-splitter
-                        # appends past the end of the span (parity artifact
-                        # of re-appending '\n' to the final split line)
-                        over = (r.offset + len(r.text)) - len(stext)
-                        if over > 0:
-                            r.text = r.text[:-over]
-                        if SP.filter_sentence(r.text, r.sent_type,
-                                              filter_header=filter_headers):
-                            continue
-                        out["doc_id"].append(doc_id)
-                        out["sent_id"].append(sent_id)
-                        out["sent_type"].append(r.sent_type)
-                        out["text"].append(r.text)
-                        out["offset"].append(int(soff) + r.offset)
-                        out["paragraph_id"].append(pid_for(r.offset))
-                        sent_id += 1
-                    para_base += len(paras)
-            if out["doc_id"]:  # empty frames infer float64 cols, breaking Arrow
-                yield pd.DataFrame(out)
+            rows = [s for doc_id, spans in zip(pdf["doc_id"], pdf["spans"])
+                    for s in _doc_sentences(doc_id, spans, doc_type,
+                                            filter_headers)]
+            if rows:  # empty frames infer float64 cols, breaking Arrow
+                yield pd.DataFrame.from_records(rows, columns=columns)
 
     return documents.mapInPandas(gen, schema=SENTENCES_SCHEMA)
 
 
+class MentionColumns:
+    """``MENTIONS_SCHEMA`` rows accumulated column-wise: matcher output goes
+    into one list per column (list columns as flat values plus end
+    offsets) and leaves as a single ``pyarrow.RecordBatch`` — no
+    per-mention dicts and no pandas frame on the way to Arrow. Annotation
+    offsets are rebased to document-absolute (Mention.java:75-81)."""
+
+    def __init__(self) -> None:
+        self.doc_id: list = []
+        self.sent_id: list = []
+        self.cui: list = []
+        self.concept_name: list = []
+        self.matched_term: list = []
+        self.normalized_term: list = []
+        self.score: list = []
+        self.start: list = []
+        self.end: list = []
+        self.ann_text: list = []
+        self.ann_offset: list = []
+        self.ann_ends: list = [0]
+        self.sem_types: list = []
+        self.sem_ends: list = [0]
+        self.sources: list = []
+        self.src_ends: list = [0]
+
+    def add(self, doc_id: str, sent_id: int, offset: int, mentions) -> None:
+        """Append the mentions of the sentence at document offset
+        ``offset``."""
+        for m in mentions:
+            anns = m.annotations
+            self.doc_id.append(doc_id)
+            self.sent_id.append(sent_id)
+            self.cui.append(m.cui)
+            self.concept_name.append(m.concept_name)
+            self.matched_term.append(m.matched_term)
+            self.normalized_term.append(m.normalized_term)
+            self.score.append(float(m.score))
+            if anns:
+                self.start.append(offset + anns[0][1])
+                self.end.append(offset + max(o + len(t) for t, o in anns))
+            else:
+                self.start.append(-1)
+                self.end.append(-1)
+            self.ann_text.extend(t for t, _ in anns)
+            self.ann_offset.extend(offset + o for _, o in anns)
+            self.ann_ends.append(len(self.ann_text))
+            self.sem_types.extend(m.sem_types)
+            self.sem_ends.append(len(self.sem_types))
+            self.sources.extend(m.sources)
+            self.src_ends.append(len(self.sources))
+
+    def batch(self) -> pa.RecordBatch:
+        def strings(xs: list) -> pa.Array:
+            return pa.array(xs, pa.string())
+
+        def ints(xs: list) -> pa.Array:
+            return pa.array(xs, pa.int32())
+
+        def listed(ends: list, values: pa.Array) -> pa.Array:
+            return pa.ListArray.from_arrays(ints(ends), values)
+
+        annotations = pa.StructArray.from_arrays(
+            [strings(self.ann_text), ints(self.ann_offset)],
+            names=["text", "offset"])
+        return pa.RecordBatch.from_arrays([
+            strings(self.doc_id), ints(self.sent_id), strings(self.cui),
+            strings(self.concept_name), strings(self.matched_term),
+            strings(self.normalized_term), pa.array(self.score, pa.float64()),
+            listed(self.ann_ends, annotations),
+            ints(self.start), ints(self.end),
+            listed(self.sem_ends, strings(self.sem_types)),
+            listed(self.src_ends, strings(self.sources)),
+        ], names=MENTIONS_SCHEMA.fieldNames())
+
+
+def _mention_batch(sentences, dico_bc, cfg: SearchConfig,
+                   deid_scrub: bool = True) -> pa.RecordBatch:
+    """Match ``(doc_id, sent_id, text, offset)`` sentences into one
+    ``MENTIONS_SCHEMA`` batch."""
+    dico: Dictionary = dico_bc.value if hasattr(dico_bc, "value") else dico_bc
+    out = MentionColumns()
+    for doc_id, sent_id, text, offset in sentences:
+        stext = SP.filter_deid_tags(text) if deid_scrub else text
+        out.add(doc_id, sent_id, offset, process_sentence(stext, dico, cfg))
+    return out.batch()
+
+
 def detect_mentions(sentences: DataFrame, dico_bc, cfg: SearchConfig | None = None,
                     deid_scrub: bool = True) -> DataFrame:
-    """P2: the match stage. Broadcast-dictionary probe inside mapInPandas —
+    """P2: the match stage. Broadcast-dictionary probe inside mapInArrow —
     relationally a broadcast hash semi-join of sentence words against the WT
     table followed by the TC expansion, executed as in-memory dict probes.
-    Annotation offsets are rebased to document-absolute (Mention.java:75-81).
     """
     cfg = cfg or for_search_method(None)
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        dico: Dictionary = dico_bc.value if hasattr(dico_bc, "value") else dico_bc
-        for pdf in batches:
-            out: dict[str, list] = {f.name: [] for f in MENTIONS_SCHEMA.fields}
-            for doc_id, sent_id, text, offset in zip(
-                    pdf["doc_id"], pdf["sent_id"], pdf["text"], pdf["offset"]):
-                stext = SP.filter_deid_tags(text) if deid_scrub else text
-                for m in process_sentence(stext, dico, cfg):
-                    anns = [{"text": t, "offset": int(offset) + o}
-                            for t, o in m.annotations]
-                    out["doc_id"].append(doc_id)
-                    out["sent_id"].append(int(sent_id))
-                    out["cui"].append(m.cui)
-                    out["concept_name"].append(m.concept_name)
-                    out["matched_term"].append(m.matched_term)
-                    out["normalized_term"].append(m.normalized_term)
-                    out["score"].append(float(m.score))
-                    out["annotations"].append(anns)
-                    out["start"].append(anns[0]["offset"] if anns else -1)
-                    out["end"].append(max(a["offset"] + len(a["text"]) for a in anns)
-                                      if anns else -1)
-                    out["sem_types"].append(list(m.sem_types))
-                    out["sources"].append(list(m.sources))
-            if out["doc_id"]:  # empty frames infer float64 cols, breaking Arrow
-                yield pd.DataFrame(out)
+    def gen(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for b in batches:
+            yield _mention_batch(
+                zip(*(b.column(c).to_pylist()
+                      for c in ("doc_id", "sent_id", "text", "offset"))),
+                dico_bc, cfg, deid_scrub)
 
-    return sentences.mapInPandas(gen, schema=MENTIONS_SCHEMA)
+    return sentences.mapInArrow(gen, schema=MENTIONS_SCHEMA)
+
+
+def _split_and_match(documents: DataFrame, dico_bc,
+                     cfg: SearchConfig) -> DataFrame:
+    """P1+P2 fused: ``detect_mentions(split_sentences(documents))`` as ONE
+    Python stage — each document is split and its kept sentences matched
+    in the same Arrow batch, so a pass pays one Python task per partition
+    and never ships the sentences back through the JVM."""
+
+    def gen(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for b in batches:
+            yield _mention_batch(
+                ((doc_id, sent_id, text, offset)
+                 for doc_id, spans in zip(b.column("doc_id").to_pylist(),
+                                          b.column("spans").to_pylist())
+                 for _, sent_id, _, text, offset, _ in _doc_sentences(
+                     doc_id, spans)),
+                dico_bc, cfg)
+
+    return (documents.select("doc_id", "spans")
+            .mapInArrow(gen, schema=MENTIONS_SCHEMA))
 
 
 ANNOTATED_SCHEMA = ST.StructType(
@@ -408,9 +510,11 @@ def run_pipeline(spark: SparkSession, documents: DataFrame, dico: Dictionary,
                  method: str | None = None, salt_buckets: int = 0,
                  context_dico: Dictionary | None = None,
                  ) -> dict[str, DataFrame]:
-    """End-to-end P0->P6. Without a modifier terminology the match stage is
-    fully narrow (mapInPandas); with one, the fused doc-level annotate pass
-    (P2+P3) runs instead — one shuffle on doc_id. Returns all frames."""
+    """End-to-end P0->P6. Without a modifier terminology, split and match
+    run fused in one narrow Python stage over the documents; with one, the
+    fused doc-level annotate pass (P2+P3) runs over the split sentences —
+    one shuffle on doc_id. Returns all frames; ``sentences`` is the lazy
+    ``split_sentences`` of the documents either way."""
     cfg = for_search_method(method)
     dico_bc = spark.sparkContext.broadcast(dico)
     docs = salt_documents(documents, salt_buckets)
@@ -419,7 +523,7 @@ def run_pipeline(spark: SparkSession, documents: DataFrame, dico: Dictionary,
         context_bc = spark.sparkContext.broadcast(context_dico)
         mentions = annotate_documents(sentences, dico_bc, context_bc, cfg)
     else:
-        mentions = detect_mentions(sentences, dico_bc, cfg)
+        mentions = _split_and_match(docs, dico_bc, cfg)
     triples = materialize_triples(mentions, spark, dico)
     return {"documents": docs, "sentences": sentences,
             "mentions": mentions, "triples": triples}

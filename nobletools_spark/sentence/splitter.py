@@ -45,10 +45,15 @@ _EXCEPTIONS = [
 _MERGE_LAST = re.compile(r".+\s([A-Z]?[a-z]+|\d+),?")
 _MERGE_NEXT = re.compile(r"([A-Z]?[a-z]+)\b.+", re.DOTALL)
 
+# only ever used with search(), where a run of one or more non-space
+# characters matches exactly when its last one does: the single-character
+# forms accept the same lines as SynopticReportDetector's
+# [^\s]+[\._]{4,}[^\s]+ / [^\s]+[\t]{1,}[^\s]+ in linear time (the '+'
+# forms backtrack quadratically on whitespace-free input)
 _SYNOPTIC = [
-    re.compile(r"[^\s]+[\._]{4,}[^\s]+"),
+    re.compile(r"[^\s][\._]{4,}[^\s]"),
     re.compile(r"\(\s*\)"),
-    re.compile(r"[^\s]+[\t]{1,}[^\s]+"),
+    re.compile(r"[^\s]\t+[^\s]"),
 ]
 _SYNOPTIC_PREFIX = re.compile(r"^\s*synoptic\b")
 _SYNOPTIC_XLINE = re.compile(r"^_[xX_]_")

@@ -1,6 +1,9 @@
 """Spark pipeline end-to-end tests: P0 ingest -> P1 split -> P2 match ->
 P6 triples, the span-sequence invariant, and generation determinism."""
 
+import json
+from collections import Counter
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -99,6 +102,68 @@ class TestPipeline:
             for a in r.annotations:
                 got.add((r.doc_id, r.cui, a.offset, a.text))
         assert got == expected
+
+
+def _multiset(df) -> Counter:
+    return Counter(json.dumps(r.asDict(recursive=True), sort_keys=True)
+                   for r in df.collect())
+
+
+@pytest.fixture(scope="module")
+def corpora(spark):
+    """(documents, dictionary) per corpus shape: flat bag-of-words text over
+    the dataeng vocabulary through the interleave adapter, and generated
+    clinical notes with headers, media spans and paragraphs."""
+    import random
+
+    from nobletools_spark.terminology.dataeng import dataeng_dictionary
+    dataeng = dataeng_dictionary()
+    vocab = sorted({w for c in dataeng.concepts.values()
+                    for s in c.synonyms for w in s.split()})
+    rng = random.Random(3)
+    flat = spark.createDataFrame(
+        [(i, " ".join(rng.choice(vocab) + ("." if rng.random() < 0.1 else "")
+                      for _ in range(rng.randint(5, 60))))
+         for i in range(200)], "doc_id long, text string")
+    return {
+        "flat": (interleave_flat_documents(flat).cache(), dataeng),
+        "clinical": (generate_documents(spark, 60, seed=11, partitions=3)
+                     .cache(), fixture_dictionary()),
+    }
+
+
+class TestFusedMatchStage:
+    """``run_pipeline`` without context splits and matches in one Python
+    stage; it must emit exactly the rows of the two public stages."""
+
+    @pytest.mark.parametrize("corpus_name", ["flat", "clinical"])
+    @pytest.mark.parametrize("method", ["best-match", "all-match",
+                                        "precise-match", "partial-match",
+                                        "nonoverlap-match"])
+    def test_mentions_equal_split_then_detect(self, spark, corpora,
+                                              corpus_name, method):
+        from nobletools_spark.config import for_search_method
+        from nobletools_spark.pipeline.stages import (detect_mentions,
+                                                      split_sentences)
+        docs, dico = corpora[corpus_name]
+        fused = run_pipeline(spark, docs, dico, method)["mentions"]
+        staged = detect_mentions(split_sentences(docs),
+                                 spark.sparkContext.broadcast(dico),
+                                 for_search_method(method))
+        expected = _multiset(staged)
+        assert sum(expected.values()) > 0
+        assert _multiset(fused) == expected
+
+    @pytest.mark.parametrize("corpus_name", ["flat", "clinical"])
+    def test_triples_equal_checkpointed_pipeline(self, spark, corpora,
+                                                 corpus_name, tmp_path):
+        from nobletools_spark.pipeline.checkpoint import \
+            run_checkpointed_pipeline
+        docs, dico = corpora[corpus_name]
+        fused = run_pipeline(spark, docs, dico, "best-match")["triples"]
+        ckpt = run_checkpointed_pipeline(spark, docs, dico, str(tmp_path),
+                                         "best-match")["triples"].df
+        assert _multiset(fused) == _multiset(ckpt)
 
 
 class TestParagraphScope:

@@ -3,6 +3,8 @@
 cartesian products in scale paths) asserted against `.explain` output so
 refactors can't silently regress them."""
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -42,10 +44,15 @@ class TestPushdownAndPruning:
         assert "CartesianProduct" not in plan
 
 
+def python_maps(plan: str) -> int:
+    """Python map operators (MapInPandas / MapInArrow) in a plan."""
+    return len(re.findall(r"\bMapIn(?:Pandas|Arrow)\b", plan))
+
+
 class TestKgPipelinePlans:
     def test_mention_detect_is_narrow(self, spark):
         # the match stage must not shuffle: scan -> (project) -> two
-        # mapInPandas stages (split + match), zero Exchange operators
+        # Python map stages (split + match), zero Exchange operators
         from nobletools_spark.pipeline.documents import (
             interleave_flat_documents)
         from nobletools_spark.pipeline.stages import (detect_mentions,
@@ -57,7 +64,28 @@ class TestKgPipelinePlans:
             split_sentences(interleave_flat_documents(flat)), bc)
         plan = plan_of(mentions)
         assert "Exchange" not in plan
-        assert plan.count("MapInPandas") == 2
+        assert python_maps(plan) == 2
+
+    def test_run_pipeline_splits_and_matches_in_one_python_stage(self, spark):
+        # without a modifier terminology the mentions come out of ONE
+        # Python map over the documents (split + match fused), and the
+        # only Exchange of the triples is the dedup above it
+        from nobletools_spark.pipeline.documents import (
+            interleave_flat_documents)
+        from nobletools_spark.pipeline.stages import run_pipeline
+        from nobletools_spark.terminology.fixture import fixture_dictionary
+        flat = spark.read.parquet(f"{SF}/documents.parquet")
+        out = run_pipeline(spark, interleave_flat_documents(flat),
+                           fixture_dictionary())
+        assert python_maps(plan_of(out["mentions"])) == 1
+        assert "Exchange" not in plan_of(out["mentions"])
+        # the plan prints parents first: what follows the dedup's
+        # Exchange is the mention branch below it
+        plan = plan_of(out["triples"])
+        dedup = plan.index("Exchange hashpartitioning(subj")
+        below = plan[dedup + 1:]
+        assert python_maps(below) == 1
+        assert "Exchange" not in below
 
     def test_context_pass_single_doc_shuffle(self, spark):
         from nobletools_spark.context.lexicon import modifier_dictionary
