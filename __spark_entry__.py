@@ -137,16 +137,12 @@ def _kg_ancestors(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _kg_canonical_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
     """P5+P6: mention CUIs rewritten through the connected-components
-    canonical map before triple materialization."""
-    from nobletools_spark.graph.canonicalize import canonical_map
+    canonical map of the terminology before triple materialization."""
+    from nobletools_spark.graph.canonicalize import dictionary_canonical_map
     from nobletools_spark.pipeline.stages import materialize_triples
-    from nobletools_spark.terminology.build import build_terminology
     dico = _dico()
-    tables = build_terminology(spark, list(dico.concepts.values()),
-                               dico.build_config)
-    cmap = canonical_map(tables["term_index"], tables["code_xref"])
     return materialize_triples(_kg_mentions_raw(spark, sf_dir), spark, dico,
-                               canonical=cmap)
+                               canonical=dictionary_canonical_map(spark, dico))
 
 
 def _kg_root_paths(spark: SparkSession, sf_dir: str) -> DataFrame:

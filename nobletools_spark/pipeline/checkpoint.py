@@ -21,17 +21,30 @@ Iceberg table + snapshot).
 
 Lineage counters double as the per-partition metrics the north rule asks
 for: they record how many rows each partition produced, which makes skew
-visible (max/median partition ratio) without a Spark UI.
+visible (max/median partition ratio) without a Spark UI. They cost no
+Spark job: the write tags each row with its ``spark_partition_id`` in a
+``_pid`` column, and the driver reads the counts back from the parquet
+footers it just wrote (``footer_lineage``) — rows per row group, the
+partition id from the ``_pid`` min/max statistics. A footer without a
+single ``_pid`` value is an error, never a guess. The root is a local
+directory (manifests go through ``open``/``os.replace``), so the footers
+are local files.
+
+The mentions fingerprint folds in a content digest of the dictionary and
+of the modifier lexicon (``dictionary_digest``), so a changed terminology
+recomputes mentions, canonical map and triples instead of resuming them.
 """
 
 from __future__ import annotations
 
+import dataclasses
 import hashlib
 import json
 import os
 from dataclasses import dataclass, field
 from typing import Callable
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -42,6 +55,50 @@ def fingerprint(*parts: str) -> str:
         h.update(p.encode())
         h.update(b"\x00")
     return h.hexdigest()[:16]
+
+
+def dictionary_digest(dico) -> str:
+    """Content digest of a ``Dictionary``: concepts, term, regex and code
+    maps, isa edges and build config, each in sorted order (no ``hash()``,
+    so it is stable across processes)."""
+    content = {
+        "concepts": [dataclasses.asdict(dico.concepts[c])
+                     for c in sorted(dico.concepts)],
+        "term_map": sorted(dico.term_map.items()),
+        "regex_map": sorted(dico.regex_map.items()),
+        "code_map": sorted(dico.code_map.items()),
+        "isa_edges": sorted(dico.isa_edges),
+        "build_config": dataclasses.asdict(dico.build_config),
+    }
+    return fingerprint(json.dumps(content, sort_keys=True))
+
+
+def footer_lineage(data_path: str) -> list[dict]:
+    """[{partition_id, rows_out}] of a checkpoint's parquet files, from
+    their footers: row counts per row group, summed per ``_pid`` value.
+    Raises when a non-empty row group's ``_pid`` statistics are missing or
+    span more than one partition."""
+    counts: dict[int, int] = {}
+    for name in sorted(os.listdir(data_path)):
+        if name.startswith(("_", ".")):
+            continue  # _SUCCESS, .crc: Spark's hidden-file convention
+        path = os.path.join(data_path, name)
+        meta = pq.read_metadata(path)
+        for i in range(meta.num_row_groups):
+            rg = meta.row_group(i)
+            if rg.num_rows == 0:
+                continue
+            stats = next((rg.column(j).statistics
+                          for j in range(rg.num_columns)
+                          if rg.column(j).path_in_schema == "_pid"), None)
+            if (stats is None or not stats.has_min_max
+                    or stats.min != stats.max):
+                raise RuntimeError(
+                    f"{path}: row group {i} has no single _pid value in its "
+                    f"statistics; cannot attribute its rows to a partition")
+            counts[stats.min] = counts.get(stats.min, 0) + rg.num_rows
+    return [{"partition_id": int(p), "rows_out": n}
+            for p, n in sorted(counts.items())]
 
 
 @dataclass
@@ -90,17 +147,12 @@ class CheckpointManager:
             return res
 
         df = compute()
-        # lineage: rows produced per output partition, captured in the same
+        # lineage: rows produced per output partition, tagged in the same
         # pass that writes the data (spark_partition_id of the write plan)
+        # and counted from the written footers
         with_pid = df.withColumn("_pid", F.spark_partition_id())
         with_pid.write.mode("overwrite").parquet(data_path)
-        written = self.spark.read.parquet(data_path)
-        lineage_rows = (written.groupBy("_pid")
-                        .agg(F.count(F.lit(1)).alias("rows_out"))
-                        .collect())
-        lineage = sorted(
-            ({"partition_id": int(r._pid), "rows_out": int(r.rows_out)}
-             for r in lineage_rows), key=lambda x: x["partition_id"])
+        lineage = footer_lineage(data_path)
         rows = sum(x["rows_out"] for x in lineage)
 
         manifest = {"stage": stage, "fingerprint": fp, "rows": rows,
@@ -147,6 +199,9 @@ def run_checkpointed_pipeline(spark: SparkSession, documents: DataFrame,
     cm = CheckpointManager(spark, root)
     cfg = for_search_method(method)
     dico_bc = spark.sparkContext.broadcast(dico)
+    terminology = (dictionary_digest(dico),
+                   dictionary_digest(context_dico)
+                   if context_dico is not None else "")
 
     fp_sent = fingerprint("sentences", str(salt_buckets))
     sent = cm.run_stage(
@@ -154,7 +209,8 @@ def run_checkpointed_pipeline(spark: SparkSession, documents: DataFrame,
         lambda: split_sentences(salt_documents(documents, salt_buckets)))
 
     fp_men = fingerprint("mentions", fp_sent, str(method),
-                         "ctx" if context_dico is not None else "")
+                         "ctx" if context_dico is not None else "",
+                         *terminology)
     if context_dico is not None:
         ctx_bc = spark.sparkContext.broadcast(context_dico)
         men = cm.run_stage(
@@ -168,13 +224,10 @@ def run_checkpointed_pipeline(spark: SparkSession, documents: DataFrame,
     canonical = None
     fp_canon = fingerprint("canonical", fp_men, str(canonicalize))
     if canonicalize:
-        def build_canonical():
-            from ..graph.canonicalize import canonical_map
-            from ..terminology.build import build_terminology
-            tables = build_terminology(
-                spark, list(dico.concepts.values()), dico.build_config)
-            return canonical_map(tables["term_index"], tables["code_xref"])
-        canon_res = cm.run_stage("canonical", fp_canon, build_canonical)
+        from ..graph.canonicalize import dictionary_canonical_map
+        canon_res = cm.run_stage(
+            "canonical", fp_canon,
+            lambda: dictionary_canonical_map(spark, dico))
         canonical = canon_res.df
 
     fp_tri = fingerprint("triples", fp_canon)

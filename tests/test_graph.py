@@ -1,6 +1,10 @@
 """G-group + P5 tests: ancestor closure over the fixture ISA diamond,
 paths-to-root limits, ancestry semi-join, connected-components
-canonicalization, and canonical triple materialization."""
+canonicalization (Spark and dictionary paths), and canonical triple
+materialization."""
+
+import random
+from collections import deque
 
 import pytest
 from pyspark.sql import functions as F
@@ -8,12 +12,16 @@ from pyspark.sql import functions as F
 from nobletools_spark.graph.canonicalize import (canonical_map,
                                                  canonicalize_mentions,
                                                  connected_components,
+                                                 dictionary_canonical_map,
                                                  synonym_edges, xref_edges)
 from nobletools_spark.graph.hierarchy import (ancestors_closure,
                                               has_ancestor, isa_edges_df,
                                               paths_to_root)
+from nobletools_spark.terminology.build import build_terminology
+from nobletools_spark.terminology.dataeng import dataeng_dictionary
 from nobletools_spark.terminology.fixture import (FIXTURE_ISA_EDGES,
                                                   fixture_dictionary)
+from nobletools_spark.terminology.storage import build_dictionary
 
 
 @pytest.fixture(scope="module")
@@ -171,6 +179,131 @@ class TestCanonicalize:
         got = {(r.doc_id, r.cui)
                for r in canonicalize_mentions(mentions, mapping).collect()}
         assert got == {("d1", "A"), ("d1", "Z")}
+
+
+def _word(i: int) -> str:
+    """A distinct vowel-free word per index: no stemming rule or stop word
+    applies, so each stays its own normalized term."""
+    letters = "bcdfghjklmnpqrtvwxz"
+    out = "zk"
+    while True:
+        out += letters[i % len(letters)]
+        i //= len(letters)
+        if not i:
+            return out
+
+
+def _random_concepts(seed: int, n: int = 80, shared: int = 20,
+                     codes: int = 12) -> list[dict]:
+    """Concepts with private names, 0-2 synonyms drawn from a small shared
+    pool (the synonym edges) and codes drawn from a small pool (shared
+    codes). CUIs mix prefixes so the component minimum is a real string
+    comparison ('C' < 'D' < 'c')."""
+    rng = random.Random(seed)
+    cuis = [rng.choice("CDc") + f"{k:07d}"
+            for k in rng.sample(range(10 ** 6), n)]
+    return [{"cui": cui, "name": _word(i),
+             "synonyms": [_word(1000 + rng.randrange(shared))
+                          for _ in range(rng.choice((0, 1, 1, 2)))],
+             "codes": {"SRC": f"K{rng.randrange(codes)}"}}
+            for i, cui in enumerate(cuis)]
+
+
+def _chain_concepts(n: int) -> list[dict]:
+    """Concept i shares one synonym with concept i+1: a path of n CUIs."""
+    return [{"cui": f"C{i:03d}", "name": _word(i),
+             "synonyms": [_word(1000 + i), _word(1000 + i + 1)]}
+            for i in range(n)]
+
+
+def _hash_min_rounds(term_map) -> int:
+    """Largest distance from a CUI to its component minimum over the
+    star-shaped synonym edges: the rounds hash-min label propagation
+    needs before its convergence probe."""
+    adj: dict[str, set[str]] = {}
+    for cuis in term_map.values():
+        for c in cuis[1:]:
+            adj.setdefault(cuis[0], set()).add(c)
+            adj.setdefault(c, set()).add(cuis[0])
+    worst, seen = 0, set()
+    for root in sorted(adj):
+        if root in seen:
+            continue
+        dist, queue = {root: 0}, deque([root])
+        while queue:
+            x = queue.popleft()
+            for y in adj[x]:
+                if y not in dist:
+                    dist[y] = dist[x] + 1
+                    queue.append(y)
+        seen |= set(dist)
+        worst = max(worst, *dist.values())
+    return worst
+
+
+def _as_dict(df) -> dict[str, str]:
+    rows = [(r.cui, r.canonical_cui) for r in df.collect()]
+    out = dict(rows)
+    assert len(out) == len(rows)
+    return out
+
+
+def _spark_map(spark, dico) -> dict[str, str]:
+    tables = build_terminology(spark, list(dico.concepts.values()),
+                               dico.build_config)
+    return _as_dict(canonical_map(tables["term_index"], tables["code_xref"]))
+
+
+class TestDictionaryCanonicalMap:
+    """The driver-side union-find map against the Spark reference."""
+
+    @pytest.mark.parametrize("name", ["fixture", "dataeng", "random-1",
+                                      "random-2", "random-3"])
+    def test_equals_spark_canonical_map(self, spark, name):
+        if name == "fixture":
+            dico = fixture_dictionary()
+        elif name == "dataeng":
+            dico = dataeng_dictionary()
+        else:
+            dico = build_dictionary(_random_concepts(int(name[-1])))
+            assert _hash_min_rounds(dico.term_map) < 15  # under the cap
+        got = _as_dict(dictionary_canonical_map(spark, dico))
+        assert got == _spark_map(spark, dico)
+        if name.startswith("random"):
+            assert len(got) >= 20  # components to merge, not a trivial map
+            assert len(set(dico.code_map.values())) < len(dico.concepts)
+
+    @pytest.mark.parametrize("seed", [1, 2, 3])
+    def test_first_wins_code_xref_adds_no_edges(self, spark, seed):
+        concepts = _random_concepts(seed)
+        tables = build_terminology(spark, concepts)
+        codes = [c["codes"]["SRC"] for c in concepts]
+        assert len(set(codes)) < len(codes)  # codes really are shared
+        assert xref_edges(tables["code_xref"]).count() == 0
+        assert (_as_dict(canonical_map(tables["term_index"],
+                                       tables["code_xref"]))
+                == _as_dict(canonical_map(tables["term_index"])))
+
+    def test_long_chain_resolves_where_spark_cap_raises(self, spark):
+        dico = build_dictionary(_chain_concepts(24))
+        assert _hash_min_rounds(dico.term_map) == 23
+        got = _as_dict(dictionary_canonical_map(spark, dico))
+        assert got == {f"C{i:03d}": "C000" for i in range(24)}
+        with pytest.raises(RuntimeError, match="max_iter=15"):
+            _spark_map(spark, dico)
+
+    def test_empty_when_no_term_is_shared(self, spark):
+        dico = build_dictionary(_chain_concepts(1))
+        df = dictionary_canonical_map(spark, dico)
+        assert df.columns == ["cui", "canonical_cui"] and df.count() == 0
+
+
+class TestConnectedComponentsCap:
+    def test_unconverged_labeling_raises(self, spark):
+        # 24-concept chain: 15 rounds leave C016-C023 labeled C001-C008
+        tables = build_terminology(spark, _chain_concepts(24))
+        with pytest.raises(RuntimeError, match="max_iter=15"):
+            canonical_map(tables["term_index"]).collect()
 
 
 class TestCanonicalTriples:
